@@ -1192,7 +1192,7 @@ object Cdc {
     */
   def versionedLogStream(delta: DataFrame, root: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    delta.writeStream.outputMode("append")
+    graft.streaming.TickSink.appendStream(delta)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         commitLogBatch(batch.sparkSession, root,
           fromV = batchId.toInt, toV = batchId.toInt + 1, log = batch)
@@ -1698,7 +1698,7 @@ object Cdc {
     */
   def morLogStream(delta: DataFrame, logPath: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    delta.writeStream.outputMode("append")
+    graft.streaming.TickSink.appendStream(delta)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         batch.write.mode("overwrite").parquet(s"$logPath/day=$batchId")
       }

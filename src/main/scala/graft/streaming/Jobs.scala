@@ -65,7 +65,9 @@ private[streaming] object JobRunner {
       .config("spark.sql.streaming.noDataMicroBatches.enabled", "true")
     if (!sys.env.get("SPARK_GRAFT_STATE_STORE").contains("memory"))
       builder.config("spark.sql.streaming.stateStore.providerClass", RocksDbProvider)
-    builder.getOrCreate()
+    val spark = builder.getOrCreate()
+    LocalCheckpointFileManager.install(spark.conf)
+    spark
   }
 
   def parseSink(spec: String): TickSink.Sink = spec.split(":", 3) match {

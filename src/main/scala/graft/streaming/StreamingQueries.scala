@@ -498,7 +498,7 @@ object StreamingQueries {
       baseIndex: String, streamRoot: String, outRoot: String,
       k: Int = 8, rowsPerBand: Int = 2)
       : org.apache.spark.sql.streaming.DataStreamWriter[DedupDoc] =
-    docs.writeStream.outputMode("append")
+    TickSink.appendStream(docs)
       .foreachBatch { (batch: Dataset[DedupDoc], batchId: Long) =>
         maintainDedupBatch(batch.sparkSession, batch.toDF(), batchId,
           baseIndex, streamRoot, outRoot, k, rowsPerBand)
@@ -556,7 +556,7 @@ object StreamingQueries {
       spark: SparkSession, vecs: Dataset[AnnVec],
       indexDir: String, streamRoot: String, m: Int = 8)
       : org.apache.spark.sql.streaming.DataStreamWriter[AnnVec] =
-    vecs.writeStream.outputMode("append")
+    TickSink.appendStream(vecs)
       .foreachBatch { (batch: Dataset[AnnVec], batchId: Long) =>
         maintainAnnBatch(batch.toDF(), batchId, indexDir, streamRoot, m)
       }

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
-import org.apache.spark.sql.Row
 
 /** Sink adapters for the reference's INSERT INTO targets (SURVEY.md S9):
   * print → console, blackhole → noop, kinesis → partitioned file/foreachBatch
@@ -58,9 +59,10 @@ object TickSink {
     *      (`data/batch_id=<id>`, mode overwrite) — a replay overwrites the
     *      same files instead of appending new ones, so the write is
     *      idempotent even mid-flight;
-    *   2. a zero-byte marker `_manifest/<id>` is created (create+rename —
-    *      atomic on HDFS-shaped stores) strictly AFTER the data lands;
-    *      an already-present marker short-circuits the replay entirely;
+    *   2. a zero-byte marker `_manifest/<id>` is created strictly AFTER
+    *      the data lands, atomically and only if absent, by the session's
+    *      checkpoint manager; an already-present marker short-circuits the
+    *      replay entirely;
     *   3. readers go through [[committedRows]], which lists the manifest
     *      and reads ONLY committed batch directories — a torn half-written
     *      directory from a crash is invisible until its marker exists.
@@ -88,9 +90,18 @@ object TickSink {
       fieldDelimiter: String,
       send: (String, Seq[Row]) => Unit) extends Sink
 
+  /** Every engine stream starts here: an append-mode writer whose session
+    * checkpoints through [[LocalCheckpointFileManager]] unless the caller
+    * chose another manager.
+    */
+  def appendStream[T](ds: Dataset[T]): DataStreamWriter[T] = {
+    LocalCheckpointFileManager.install(ds.sparkSession.conf)
+    ds.writeStream.outputMode("append")
+  }
+
   /** Wire a sink onto a streaming DataFrame; caller starts the query. */
   def writer(df: DataFrame, sink: Sink, availableNow: Boolean = false): DataStreamWriter[Row] = {
-    val base = df.writeStream.outputMode("append")
+    val base = appendStream(df)
     val w = sink match {
       case Console => base.format("console").option("truncate", "false")
       case Noop => base.format("noop")
@@ -138,17 +149,15 @@ object TickSink {
         base
           .option("checkpointLocation", checkpoint)
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-              batch.sparkSession.sparkContext.hadoopConfiguration)
-            val marker = new org.apache.hadoop.fs.Path(s"$path/_manifest/$batchId")
-            if (!fs.exists(marker)) {
+            val manifest = new Path(s"$path/_manifest")
+            val marker = new Path(manifest, batchId.toString)
+            val fm = CheckpointFileManager.create(
+              manifest, batch.sparkSession.sessionState.newHadoopConf())
+            if (!fm.exists(marker)) {
               batch.write.mode("overwrite")
                 .parquet(s"$path/data/batch_id=$batchId")
-              val tmp = new org.apache.hadoop.fs.Path(
-                s"$path/_manifest/.$batchId.inprogress")
-              fs.create(tmp, true).close()
-              require(fs.rename(tmp, marker),
-                s"ExactlyOnceParquet: commit marker rename failed for batch $batchId")
+              fm.mkdirs(manifest)
+              fm.createAtomic(marker, overwriteIfPossible = false).close()
             }
           }
       case ConsoleChangelog(emit) =>
@@ -172,7 +181,7 @@ object TickSink {
     */
   def committedRows(
       spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    val manifestDir = new org.apache.hadoop.fs.Path(s"$path/_manifest")
+    val manifestDir = new Path(s"$path/_manifest")
     val fs = manifestDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val ids =
       if (!fs.exists(manifestDir)) Array.empty[String]

@@ -1665,13 +1665,45 @@ class StreamingSpec extends GraftSpec {
     assert(Files.exists(Paths.get(s"$out/ticker=MSFT")))
   }
 
-  test("exactly-once sink: replay after a torn commit writes no duplicate rows") {
-    // Crash window: the job dies AFTER the sink wrote batch N's files but
-    // BEFORE the checkpoint recorded N — on restart Spark replays N, and a
-    // plain file sink would land the rows twice. Simulate exactly that by
-    // deleting the newest record in <ckpt>/commits between two runs over
-    // the same input, and pin that the manifest-committed row set still
-    // equals the input set.
+  /** Spark's own choice for `file:` checkpoints when no class is set. */
+  private val sparkDefaultManager = classOf[
+    org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager].getName
+
+  /** Run `body` with the session's checkpoint manager class set to `cls`;
+    * `None` unsets it, so [[TickSink.writer]] installs the engine's.
+    */
+  private def withCheckpointManager[T](cls: Option[String])(body: => T): T = {
+    val key = LocalCheckpointFileManager.ConfKey
+    val prev = spark.conf.getOption(key)
+    cls.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** Start a query and wait for its AvailableNow drain. The checkpoint-path
+    * lock is released on the async listener bus after termination, so an
+    * immediate restart can transiently see "multiple streaming queries are
+    * concurrently using" — retry until it clears.
+    */
+  private def drainOnce(start: => org.apache.spark.sql.streaming.StreamingQuery,
+      attempts: Int = 40): Unit = {
+    val q = start
+    try { q.awaitTermination(); q.stop() }
+    catch {
+      case e: org.apache.spark.sql.streaming.StreamingQueryException
+        if e.getMessage.contains("concurrently using") && attempts > 0 =>
+        Thread.sleep(250); drainOnce(start, attempts - 1)
+    }
+  }
+
+  /** Crash window: the job dies AFTER the sink wrote batch N's files but
+    * BEFORE the checkpoint recorded N — on restart Spark replays N, and a
+    * plain file sink would land the rows twice. Simulate exactly that by
+    * deleting the newest record in <ckpt>/commits between two runs over
+    * the same input, and pin that the manifest-committed row set still
+    * equals the input set. The deleted record's `.crc` sidecar stays
+    * behind, so the replayed commit also rewrites over a stale sidecar.
+    */
+  private def tornCommitReplay(): Unit = {
     val dir = java.nio.file.Files.createTempDirectory("graft_e1s").toString
     val (in, out, ckpt) = (s"$dir/in", s"$dir/out", s"$dir/ckpt")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
@@ -1686,20 +1718,11 @@ class StreamingSpec extends GraftSpec {
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("v",
         org.apache.spark.sql.types.StringType)))
-    // the checkpoint-path lock is released on the async listener bus after
-    // termination, so an immediate restart can transiently see "multiple
-    // streaming queries are concurrently using" — retry until it clears
-    def runOnce(attempts: Int = 40): Unit = {
+    def runOnce(): Unit = drainOnce {
       val src = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).json(in)
-      val q = TickSink.start(src, TickSink.ExactlyOnceParquet(out, ckpt),
+      TickSink.start(src, TickSink.ExactlyOnceParquet(out, ckpt),
         availableNow = true)
-      try { q.awaitTermination(); q.stop() }
-      catch {
-        case e: org.apache.spark.sql.streaming.StreamingQueryException
-          if e.getMessage.contains("concurrently using") && attempts > 0 =>
-          Thread.sleep(250); runOnce(attempts - 1)
-      }
     }
     runOnce()
     val first = TickSink.committedRows(spark, out)
@@ -1719,6 +1742,89 @@ class StreamingSpec extends GraftSpec {
     val manifested = new java.io.File(s"$out/_manifest").listFiles()
       .map(_.getName).filter(_.forall(_.isDigit)).map(_.toInt).sorted
     assert(manifested === (0 until commits.length).toArray)
+  }
+
+  test("exactly-once sink: replay after a torn commit writes no duplicate rows") {
+    withCheckpointManager(None) {
+      tornCommitReplay()
+      assert(spark.conf.get(LocalCheckpointFileManager.ConfKey) ===
+        classOf[LocalCheckpointFileManager].getName)
+    }
+  }
+
+  test("exactly-once sink: torn-commit replay under Spark's default checkpoint manager") {
+    withCheckpointManager(Some(sparkDefaultManager))(tornCommitReplay())
+  }
+
+  test("TickSink.writer checkpoints through the engine's manager; a caller's class wins") {
+    val ckpt = new org.apache.hadoop.fs.Path(
+      java.nio.file.Files.createTempDirectory("graft_cfm").toUri)
+    def managerAfterWriter() = {
+      TickSink.writer(MemoryStream[String].toDF(), TickSink.Noop)
+      org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+        .create(ckpt, spark.sessionState.newHadoopConf())
+    }
+    withCheckpointManager(None) {
+      assert(managerAfterWriter().getClass === classOf[LocalCheckpointFileManager])
+    }
+    withCheckpointManager(Some(sparkDefaultManager)) {
+      assert(managerAfterWriter().getClass.getName === sparkDefaultManager)
+    }
+  }
+
+  test("checkpoint restarts switching between Spark's manager and the engine's keep the output") {
+    import java.nio.file.{Files, Paths}
+    import java.nio.file.attribute.FileTime
+    def sqlTick(ticker: String, price: Double, t: String) =
+      s"""{"utc":"$t","ticker":"$ticker","price":$price}"""
+    // each file advances the watermark (20 s delay) past the windows
+    // before it, so every restart commits state and emits windows
+    val files = Seq(
+      Seq(sqlTick("AAPL", 10.0, "2024-01-01 00:00:10.000"),
+        sqlTick("MSFT", 20.0, "2024-01-01 00:00:20.000")),
+      Seq(sqlTick("AAPL", 12.0, "2024-01-01 00:01:30.000"),
+        sqlTick("MSFT", 21.0, "2024-01-01 00:01:40.000"),
+        sqlTick("AAPL", 11.0, "2024-01-01 00:00:50.000")),
+      Seq(sqlTick("AAPL", 13.0, "2024-01-01 00:03:00.000"),
+        sqlTick("MSFT", 22.0, "2024-01-01 00:02:10.000")),
+      Seq(sqlTick("AAPL", 14.0, "2024-01-01 00:05:00.000")))
+    def addFile(in: String, i: Int): Unit = {
+      val p = Paths.get(s"$in/f$i.json")
+      Files.write(p, files(i).mkString("\n").getBytes("UTF-8"))
+      Files.setLastModifiedTime(p, FileTime.fromMillis(1000000L + i * 10000L))
+    }
+    def run(in: String, out: String, ckpt: String): Unit = drainOnce {
+      val ticks = TickSource.fileJson(spark, in, "SQL", maxFilesPerTrigger = Some(1))
+      TickSink.start(StreamingQueries.candlestick(ticks),
+        TickSink.ExactlyOnceParquet(out, ckpt), availableNow = true)
+    }
+    def windows(out: String) = TickSink.committedRows(spark, out).drop("batch_id")
+      .collect().toSeq
+    def key(r: Row) = (r.getAs[String]("ticker"), r.getAs[java.sql.Timestamp]("window_start"))
+    val storeKey = "spark.sql.streaming.stateStore.providerClass"
+    val prevStore = spark.conf.getOption(storeKey)
+    spark.conf.set(storeKey, JobRunner.RocksDbProvider)
+    try {
+      val root = Files.createTempDirectory("graft_mixed").toString
+      // reference: one checkpoint, one run over every file
+      val refIn = s"$root/ref_in"
+      Files.createDirectories(Paths.get(refIn))
+      files.indices.foreach(addFile(refIn, _))
+      withCheckpointManager(None)(run(refIn, s"$root/ref_out", s"$root/ref_ckpt"))
+      val expected = windows(s"$root/ref_out")
+      // the same input under default → engine → default, one restart each
+      val (in, out, ckpt) = (s"$root/in", s"$root/out", s"$root/ckpt")
+      Files.createDirectories(Paths.get(in))
+      val managers = Seq(Some(sparkDefaultManager), None, None, Some(sparkDefaultManager))
+      files.indices.foreach { i =>
+        addFile(in, i)
+        withCheckpointManager(managers(i))(run(in, out, ckpt))
+      }
+      val got = windows(out)
+      assert(expected.map(key).toSet.size >= 4, s"windows closed: $expected")
+      assert(got.size === got.map(key).distinct.size, s"no duplicated window: $got")
+      assert(got.map(_.toString).sorted === expected.map(_.toString).sorted)
+    } finally prevStore.fold(spark.conf.unset(storeKey))(spark.conf.set(storeKey, _))
   }
 
   test("job config: reference property-group shape round-trips") {
