@@ -3,13 +3,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 object Bench {
 
-  /** RocksDB state-store provider (same constant the job mains default
-    * to) — the streaming throughput numbers should measure the production
-    * state path, not the heap store.
-    */
-  private val RocksDbProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
   /** 1-minute system load average (or -1 where the JVM can't see it). A
     * loaded machine inflates every wall-clock number silently — r4's
     * driver artifact recorded 2-3x join times from exactly that — so the
@@ -62,55 +55,16 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Whole-stage-codegen compile cache (static conf, default 100
-      // entries): a 217-query interleaved pass generates thousands of
-      // distinct codegen units, so at the default size every rep of every
-      // query re-Janino-compiles its whole plan — pure fixed overhead
-      // that dwarfs the data work at the small SFs and is still dead
-      // weight at scale (the cache is keyed by generated SOURCE, so the
-      // entries are scale-independent; ~tens of KB of bytecode each).
-      // Env-parameterized for A/B (SPARK_GRAFT_CODEGEN_CACHE=100 restores
-      // the Spark default); this is a session-posture config, not a
-      // methodology change — timed regions, reps and queries unchanged.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Stats-ON default posture (r15 verdict #1): the benched binary plans
-    // with ANALYZE'd catalog statistics + CBO, the same posture Verify
-    // checks and a production deployment runs. The one-time ANALYZE cost
-    // is priced into setup_total (emitted separately as stats_s so rounds
-    // before the flip stay comparable by subtraction). SPARK_GRAFT_STATS=0
-    // opts out — the r14/r15-style stats-less A/B lever.
-    val statsS: Double =
-      if (sys.env.get("SPARK_GRAFT_STATS").contains("0")) 0.0
-      else {
-        val t0 = System.nanoTime()
-        try {
-          spark.conf.set("spark.sql.cbo.enabled", "true")
-          spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-          graft.plans.Cbo.ensureStatsAll(spark, sfDir)
-          spark.conf.set(Tables.statsCatalogConf, sfDir)
-        } catch { case scala.util.control.NonFatal(e) =>
-          // degrade to stats-less rather than killing the whole bench
-          // (the catalog conf stays unset → path reads; half-made tables
-          // were dropped by createAnalyzed's failure atomicity). NonFatal
-          // only, and the CBO confs reset, so the degraded run is the
-          // true stats-less posture, not CBO-over-empty-stats.
-          spark.conf.set("spark.sql.cbo.enabled", "false")
-          spark.conf.set("spark.sql.cbo.joinReorder.enabled", "false")
-          System.err.println(s"[bench] stats-ON setup failed, running " +
-            s"stats-less: ${e.getMessage}")
-        }
-        (System.nanoTime() - t0) / 1e9
-      }
+    val spark = Posture.session()
+    // The benched binary plans with the stats-ON posture Verify checks and
+    // a production deployment runs. The one-time ANALYZE cost is priced
+    // into setup_total (emitted separately as stats_s so rounds before the
+    // flip stay comparable by subtraction); the degrade path keeps a
+    // failed ANALYZE from killing the whole bench.
+    val statsT0 = System.nanoTime()
+    val stats = Posture.statsOn(spark, sfDir)
+    val statsS = if (stats == "off") 0.0 else (System.nanoTime() - statsT0) / 1e9
     val loadStart = loadAvg
     // Pruning-proof action: a noop-format write consumes every output
     // column of every row, so Catalyst cannot collapse projection-only
@@ -154,26 +108,13 @@ object Bench {
     val calStartReps = calibration(spark)
     val calStart = calStartReps.min
     val qseq = Registry.benchQueries.toSeq.sortBy(_._1)
-    // Deterministic checkpoint reclaim between reps: the split/checkpoint
-    // operators (quality gates, decontamination, LM scoring, gap-fill,
-    // mixtures — see Registry's eagerness scaladoc) pin localCheckpoint
-    // partitions in executor storage at construction time, and reclaim
-    // normally waits on ContextCleaner GC. Across 100+ queries × 5
-    // constructions at sf0.1 the debris outpaces the cleaner, inflating
-    // the LATE series (warm ran slower than cold; streaming rates sank
-    // ~8×) purely through heap/storage pressure. Every constructed frame
-    // is rep-local garbage by definition, so dropping ALL persistent RDDs
-    // after the timed action is always safe here — and puts the bench
-    // back to measuring plans instead of leak accumulation.
-    def reclaim(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
     def timed(fn: (SparkSession, String) => DataFrame): Option[Double] = {
       val t0 = System.nanoTime()
       try { exec(fn(spark, sfDir)); Some((System.nanoTime() - t0) / 1e9) }
       catch { case _: Throwable => None }
-      finally reclaim()
+      // every constructed frame is rep-local garbage by definition, so
+      // the deterministic reclaim after the timed action is always safe
+      finally Posture.reclaim(spark)
     }
     // One-time store builds (the mutation half of the CDC lifecycle
     // queries), priced SEPARATELY before the rep passes: setup_s carries
@@ -196,7 +137,7 @@ object Bench {
             try { q.setup.get(spark, sfDir); true }
             catch { case _: Throwable => false }
           val ok = attempt() || attempt()
-          reclaim()
+          Posture.reclaim(spark)
           q.name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
         }
     val setupFailed: Set[String] =
@@ -278,7 +219,10 @@ object Bench {
     val loadMid = loadAvg
     def env(loadEnd: Double) =
       s"""{"cpus":${Runtime.getRuntime.availableProcessors},""" +
-        s""""load_start":$loadStart,"load_end":$loadEnd}"""
+        s""""load_start":$loadStart,"load_end":$loadEnd,""" +
+        s""""codegen_cache":${Posture.codegenCache},"stats":"$stats",""" +
+        s""""cpus_requested":${Posture.cpus},""" +
+        s""""spark_version":"${spark.version}"}"""
     // The batch readout prints BEFORE the streaming section runs: the
     // driver's r7 artifact came back rc 124 / parsed:null because a timeout
     // inside the streaming bench killed the process before the (then
@@ -311,8 +255,7 @@ object Bench {
     // Enter the streaming phase on a clean heap: drop any remaining
     // checkpoint debris and let one full GC run, so streaming throughput
     // measures the stateful operators, not the batch phase's leftovers.
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
+    Posture.reclaim(spark)
     System.gc()
     val streaming =
       if (sys.env.get("SPARK_GRAFT_BENCH_STREAMING").contains("0")
@@ -414,8 +357,6 @@ object Bench {
       .repartition(16)
       .write.mode("overwrite").option("timestampFormat", Tick.TsFormatSql)
       .json(s"$tmp/simdocs")
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", RocksDbProvider)
     // (rps, state_rows, state_bytes) from the drained query's progress feed
     def run(out: DataFrame): (Double, Double, Double) = {
       val q = TickSink.start(out, TickSink.Noop, availableNow = true)
@@ -461,7 +402,8 @@ object Bench {
       StructField("doc_id", LongType),
       StructField("text", StringType),
       StructField("utc", TimestampType)))
-    val lines =
+    val lines = Posture.withConfs(spark,
+        Posture.StateStoreConf -> Posture.RocksDbProvider) {
       one("candlestick", run(StreamingQueries.candlestick(
         TickSource.fileJson(spark, s"$tmp/ticks")))) ++
       one("sliding_min", run(StreamingQueries.slidingMinTwoLevel(
@@ -489,9 +431,6 @@ object Bench {
             .select(explode(split(lower(trim(col("text"))), "\\s+")).as("t"))
             .as[String]).toDF())
       })
-    prev match {
-      case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
     (lines ++ Seq("tick_rows" -> nTicks.toDouble,
       "doc_rows" -> nDocs.toDouble * docReps,

@@ -145,8 +145,9 @@ object Governance {
     // are localCheckpoint'd (lazy), so the parent is scanned and
     // distinct-aggregated a single time and every later join replays the
     // materialized |keys|-row set — measured, not assumed: without the
-    // checkpoint the duplicated subtrees survive to execution (PlanAudit
-    // exec-mode shows ReusedExchange=0), each costing a parent rescan.
+    // checkpoint the duplicated subtrees survive to execution (the r13
+    // exec-mode plan audit showed ReusedExchange=0, SURVEY §8.15), each
+    // costing a parent rescan.
     val parentUses = edges.groupBy { case (_, _, _, parent, pk) =>
       (parent.queryExecution.analyzed.canonicalized, pk)
     }.map { case (k, es) => k -> es.size }

@@ -136,21 +136,6 @@ object Joins {
       .drop("_salt")
   }
 
-  /** Run `body` with session confs set, restoring prior values after.
-    * Callers must force execution INSIDE (Catalyst reads confs at
-    * optimization time, not DataFrame construction).
-    */
-  def withConfs[T](spark: org.apache.spark.sql.SparkSession,
-      pairs: (String, String)*)(body: => T): T = {
-    val prev = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   /** Deterministic skewed fixture for the AQE-vs-manual comparison: the
     * probe is lineitem with every third order key collapsed onto ONE hot
     * key (~1/3 of all probe rows land in a single join partition), the
@@ -223,7 +208,7 @@ object Joins {
     */
   def bloomRuntimeJoin(spark: org.apache.spark.sql.SparkSession,
       li: DataFrame, orders: DataFrame): DataFrame =
-    withConfs(spark,
+    graft.Posture.withConfs(spark,
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold"
         -> "0",
@@ -245,7 +230,7 @@ object Joins {
 
   def skewAqeJoin(spark: org.apache.spark.sql.SparkSession,
       li: DataFrame, orders: DataFrame): DataFrame =
-    withConfs(spark,
+    graft.Posture.withConfs(spark,
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",

@@ -67,8 +67,8 @@ object Cbo {
     * Column lists cover every join key and the selective filter/agg
     * columns the registered queries touch; heavy payload columns (text,
     * embedding) are deliberately excluded from FOR COLUMNS. Used by the
-    * `tools/StatsSweep` breadth gauge and the [[graft.Tables]]
-    * stats-catalog redirect.
+    * stats-ON posture ([[graft.Posture.statsOn]], whose r15 breadth sweep
+    * is SURVEY §8.17) and the [[graft.Tables]] stats-catalog redirect.
     */
   def ensureStatsAll(spark: SparkSession, dir: String): Map[String, String] =
     ensureTables(spark, dir, Map(
@@ -149,7 +149,7 @@ object Cbo {
     // Spark 4.1 FilterEstimation.evaluateBinary has no TimestampNTZType
     // case (scala.MatchError at FilterEstimation.scala:281) — column
     // stats on an NTZ column crash PLANNING of any query comparing it to
-    // a literal once CBO is on (the StatsSweep breadth gauge surfaced
+    // a literal once CBO is on (the r15 breadth sweep, SURVEY §8.17, surfaced
     // this on q4/q7's o_orderdate range filters; the driver's parquet
     // timestamps all read as NTZ). Excluding NTZ columns from FOR
     // COLUMNS makes estimation skip them (no stats -> default
@@ -181,16 +181,9 @@ object Cbo {
     * since Catalyst reads the conf at optimization time, not DataFrame
     * construction time.
     */
-  def withCbo[T](spark: SparkSession)(body: => T): T = {
-    val keys = Seq("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
-    val prev = keys.map(k => k -> spark.conf.getOption(k))
-    keys.foreach(k => spark.conf.set(k, "true"))
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+  def withCbo[T](spark: SparkSession)(body: => T): T =
+    graft.Posture.withConfs(spark, "spark.sql.cbo.enabled" -> "true",
+      "spark.sql.cbo.joinReorder.enabled" -> "true")(body)
 
   /** The Q3-shape SQL over the stats-bearing catalog tables, written in
     * the WORST syntactic order (fact ⋈ fact first, selective dim last).

@@ -184,7 +184,6 @@ object DocPipelineJob {
     }
 
     val spark = JobRunner.session()
-    spark.sparkContext.setLogLevel("WARN")
 
     val in = DocPipeline.fileJson(spark, inputDir)
     val out = (weightsDir, evalBucketsDir) match {
@@ -244,7 +243,6 @@ object NearDupJob {
     }.getOrElse(3600L)
 
     val spark = JobRunner.session()
-    spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
     val docs = spark.readStream.schema(nearDupDocSchema).json(inputDir)
@@ -296,7 +294,6 @@ object GridFillJob {
     }.getOrElse("10 seconds")
 
     val spark = JobRunner.session()
-    spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
     val events = spark.readStream.schema(fillEventSchema).json(inputDir)

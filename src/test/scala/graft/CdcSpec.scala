@@ -809,10 +809,8 @@ class CdcSpec extends GraftSpec {
     // scale it coalesces toward the advisory partition SIZE, keeping
     // thousands of tasks per terabyte lang) — disable coalescing here
     // so the pin observes the raw multi-task split
-    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-    val prevCoalesce = spark.conf.getOption(coalesceKey)
-    spark.conf.set(coalesceKey, "false")
-    try {
+    Posture.withConfs(spark,
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
     Cdc.versionedInit(spark, docs, root, Cdc.defaultZoneRows)
     // >1 write task per lang: distinct part indices in each lang dir
     def taskIds(dir: String): Set[String] =
@@ -853,9 +851,6 @@ class CdcSpec extends GraftSpec {
     Seq("en", "de").foreach { l =>
       assert(taskIds(s"$root/d1/lang=$l").size > 1, s"resort $l one task")
     }
-    } finally prevCoalesce match {
-      case Some(v) => spark.conf.set(coalesceKey, v)
-      case None => spark.conf.unset(coalesceKey)
     }
   }
 

@@ -7,19 +7,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * suites run sequentially, so a single session keeps the run fast).
   */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Posture.session(
+    // the suite's pins and time budget assume local[4] on any host, so the
+    // test session does not follow SPARK_GRAFT_CPUS
+    cpus = 4,
+    staticConfs = Seq("spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-wh").toString))
 }
 
 abstract class GraftSpec extends AnyFunSuite {

@@ -188,9 +188,7 @@ class PlanSpec extends GraftSpec {
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    Posture.withConfs(spark, confs: _*) {
       val o = Tables.load(spark, sf, "orders")
         .filter(org.apache.spark.sql.functions.col("o_orderpriority") === "1-URGENT")
       val li = Tables.load(spark, sf, "lineitem")
@@ -203,9 +201,6 @@ class PlanSpec extends GraftSpec {
       val p = j.queryExecution.optimizedPlan.toString.toLowerCase
       assert(p.contains("bloom"),
         s"expected an injected bloom_filter runtime filter:\n$p")
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -895,7 +890,7 @@ class PlanSpec extends GraftSpec {
     // thresholds scaled to the sf0.001 suite volumes (the registered
     // q36 query carries the sf0.1-scale 256 KB threshold; the DECISION
     // logic under test is scale-free)
-    val (aqePlan, aqeRows) = Joins.withConfs(spark,
+    val (aqePlan, aqeRows) = Posture.withConfs(spark,
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
@@ -934,7 +929,7 @@ class PlanSpec extends GraftSpec {
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold"
         -> "0",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val (onPlan, onRows) = Joins.withConfs(spark, confs: _*) {
+    val (onPlan, onRows) = Posture.withConfs(spark, confs: _*) {
       val df = Joins.bloomJoinAgg(li, o)
       (df.queryExecution.optimizedPlan.toString,
         df.collect().map(_.toString).sorted.toSeq)
@@ -943,12 +938,12 @@ class PlanSpec extends GraftSpec {
       s"no bloom built on the creation side:\n$onPlan")
     assert(onPlan.contains("might_contain"),
       s"no might_contain pushed into the fact side:\n$onPlan")
-    val offPlan = Joins.withConfs(spark,
+    val offPlan = Posture.withConfs(spark,
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "false") {
       Joins.bloomJoinAgg(li, o).queryExecution.optimizedPlan.toString
     }
     assert(!offPlan.contains("might_contain"), offPlan)
-    val offRows = Joins.withConfs(spark,
+    val offRows = Posture.withConfs(spark,
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "false") {
       Joins.bloomJoinAgg(li, o).collect().map(_.toString).sorted.toSeq
     }
@@ -990,7 +985,7 @@ class PlanSpec extends GraftSpec {
   }
 
   test("stats-ON posture: the catalog redirect flips registered plans and stays NTZ-safe") {
-    // the StatsSweep breadth gauge's two pinned discoveries, as
+    // the r15 stats breadth sweep's (SURVEY §8.17) two discoveries, as
     // regression tests: (1) under ensureStatsAll + the Tables
     // stats-catalog redirect, CostBasedJoinReorder flips q33's join
     // order (part's selective LIKE slice moves FIRST) with identical
@@ -1006,7 +1001,10 @@ class PlanSpec extends GraftSpec {
       df.queryExecution.optimizedPlan.collectLeaves().map(_.toString)
     val q33 = spec("q33_scalar_subquery_agg")
     val offLeaves = leaves(q33.run(spark, sf))
-    val (onLeaves, onRows) = graft.tools.StatsSweep.withStatsOn(spark, sf) {
+    val statsOn = Seq(Tables.statsCatalogConf -> sf,
+      "spark.sql.cbo.enabled" -> "true",
+      "spark.sql.cbo.joinReorder.enabled" -> "true")
+    val (onLeaves, onRows) = Posture.withConfs(spark, statsOn: _*) {
       (leaves(q33.run(spark, sf)),
         q33.run(spark, sf).collect().map(_.toString).sorted.toSeq)
     }
@@ -1019,7 +1017,7 @@ class PlanSpec extends GraftSpec {
     // (2) the NTZ guard: this PLANNING call crashed with a MatchError
     // before ensureStatsAll excluded NTZ columns from FOR COLUMNS
     val q4 = spec("q4_semi_join")
-    graft.tools.StatsSweep.withStatsOn(spark, sf) {
+    Posture.withConfs(spark, statsOn: _*) {
       q4.run(spark, sf).queryExecution.sparkPlan
     }
   }
@@ -1055,7 +1053,7 @@ class PlanSpec extends GraftSpec {
     assert(onSize < offSize,
       s"column stats must shrink the filtered estimate: $onSize vs $offSize")
     val threshold = ((onSize + offSize) / 2).toString
-    def strategy(cbo: Boolean): String = Joins.withConfs(spark,
+    def strategy(cbo: Boolean): String = Posture.withConfs(spark,
       (Seq("spark.sql.autoBroadcastJoinThreshold" -> threshold) ++
         (if (cbo) Seq("spark.sql.cbo.enabled" -> "true") else Seq.empty)): _*) {
       spark.sql(joinSql).queryExecution.executedPlan.toString
@@ -1083,20 +1081,13 @@ class PlanSpec extends GraftSpec {
     // prose — a stats flip or Spark upgrade that degrades one of the
     // expensive plans (a join falling off broadcast, a new cartesian, an
     // exchange multiplying) should fail CI instead. Bounds are the
-    // tools/PlanAudit counts at the spec SF with small headroom on
+    // audited counts (SURVEY §8.20; `Probe audit` counts the same way)
+    // at the spec SF with small headroom on
     // exchange counts (plan cosmetics may move one); CartesianProduct is
     // pinned to ZERO everywhere, and BroadcastNestedLoopJoin to the two
     // audited crossJoin(broadcast(single-row-aggregate)) sites only.
-    def counts(name: String): Map[String, Int] = {
-      val p = Registry.queries(name)(spark, sf)
-        .queryExecution.executedPlan.toString
-      def c(pat: String) = pat.r.findAllIn(p).size
-      Map(
-        "cartesian" -> c("CartesianProduct"),
-        "bnlj" -> c("BroadcastNestedLoopJoin"),
-        "smj" -> c("SortMergeJoin"),
-        "exchanges" -> c("Exchange hashpartitioning"))
-    }
+    def counts(name: String): Map[String, Int] = graft.tools.Probe.opCounts(
+      Registry.queries(name)(spark, sf).queryExecution.executedPlan.toString).toMap
     // name -> (max smj, max bnlj, max exchanges)
     val pins = Seq(
       ("sim_ann_ivfpq_filtered_adaptive_persisted", 0, 0, 5),

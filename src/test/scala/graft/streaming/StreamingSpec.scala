@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import graft.{GraftSpec, Tables}
+import graft.{GraftSpec, Posture, Tables}
 import graft.operators.Windows
 
 /** Streaming tests (SURVEY.md §5.3/5.4): append-mode emission after the
@@ -16,6 +16,10 @@ class StreamingSpec extends GraftSpec {
 
   private var nameCounter = 0
   private def freshName(): String = { nameCounter += 1; s"stream_out_$nameCounter" }
+
+  /** Run `body` on the RocksDB state store, the job mains' provider. */
+  private def onRocksDb[T](body: => T): T =
+    Posture.withConfs(spark, Posture.StateStoreConf -> Posture.RocksDbProvider)(body)
 
   /** Run a streaming DataFrame into a memory sink, feeding `batches` one
     * micro-batch at a time; returns the sink contents.
@@ -64,10 +68,7 @@ class StreamingSpec extends GraftSpec {
   test("candlestick runs on the RocksDB state store — the job mains' default") {
     // same emission semantics as the heap store, but state lives on local
     // disk: the provider the job mains default to for the 100 TB path
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, JobRunner.RocksDbProvider)
-    try {
+    onRocksDb {
       val input = MemoryStream[String]
       val out = StreamingQueries.candlestick(parsedTicks(input))
       val rows = runStream(input, out, Seq(
@@ -78,9 +79,6 @@ class StreamingSpec extends GraftSpec {
       assert(rows.length === 1, s"exactly the closed window: ${rows.mkString(";")}")
       assert((rows.head.getAs[Double]("first_price"),
         rows.head.getAs[Double]("max_price")) === (10.0, 12.0))
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
@@ -196,10 +194,7 @@ class StreamingSpec extends GraftSpec {
     // unlike the TTL'd EWMA, event-time timers fire off the watermark, so
     // processAllAvailable drains normally. Requires RocksDB, like the mains.
     import StreamingQueries.{SessionEvent, SessionOut}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, JobRunner.RocksDbProvider)
-    try {
+    onRocksDb {
       val input = MemoryStream[SessionEvent]
       val out = StreamingQueries.sessionizeTws(spark, input.toDS(),
         gapSeconds = 60, watermarkDelay = "0 seconds")
@@ -213,18 +208,12 @@ class StreamingSpec extends GraftSpec {
       assert(rows.toSet === Set(
         SessionOut(1L, us("2024-01-01 00:00:00"), us("2024-01-01 00:00:30"), 2L),
         SessionOut(1L, us("2024-01-01 00:02:00"), us("2024-01-01 00:02:00"), 1L)))
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
   test("streaming dedup-index maintenance equals sequential batch read-check-update runs") {
     import StreamingQueries.DedupDoc
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, JobRunner.RocksDbProvider)
-    try {
+    onRocksDb {
       val dir = java.nio.file.Files.createTempDirectory("graft_dedup_stream").toString
       val base = Seq(
         (100L, "the quick brown fox jumps over the lazy dog tonight"),
@@ -261,9 +250,6 @@ class StreamingSpec extends GraftSpec {
       // and the fixture exercises all three verdict sources: artifact
       // hit (1), fresh (2, 4), prior-micro-batch ratchet hit (3)
       assert(ref === Map(1L -> true, 2L -> false, 3L -> true, 4L -> false))
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
@@ -405,10 +391,7 @@ class StreamingSpec extends GraftSpec {
 
   test("streaming CUSUM drift alarm equals the ts-ordered Page fold (out-of-order input)") {
     import StreamingQueries.{DriftEvent, DriftAlarm}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, JobRunner.RocksDbProvider)
-    try {
+    onRocksDb {
       val (refQ, slackQ, hQ) = (1000L, 50L, 400L) // ref 10.0, slack 0.5, h 4.0
       def ev(k: String, id: Long, t: String, v: Double) = DriftEvent(k, id, ts(t), v)
       // key a: level 10 then a +3 shift -> S+ grows 250/row, alarms at the
@@ -458,9 +441,6 @@ class StreamingSpec extends GraftSpec {
       assert(expected.exists(_.side == "hi"), "fixture must exercise the hi side")
       assert(expected.exists(_.side == "lo"), "fixture must exercise the lo side")
       assert(rows === expected)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
@@ -607,10 +587,7 @@ class StreamingSpec extends GraftSpec {
     // no-prior-quote drop, the equal-ts "<=" match, and the max-event_id
     // tie on equal quote timestamps. Requires RocksDB, like the mains.
     import StreamingQueries.{AsofSideEvent, AsofMatched}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, JobRunner.RocksDbProvider)
-    try {
+    onRocksDb {
       def ev(u: Long, id: Long, t: String, v: Double) = AsofSideEvent(u, id, ts(t), v)
       // u1: quote tie at 00:00:10 (102 wins), later quote equal to probe 3's
       // ts (the "<=" edge); u2: probe BEFORE any quote -> drops
@@ -662,9 +639,6 @@ class StreamingSpec extends GraftSpec {
       assert(expected.contains(AsofMatched(3L, 1L,
         ts("2024-01-01 00:00:25").getTime * 1000L, 103L, 9.0)), "equal ts -> <=")
       assert(!expected.exists(_.event_id == 2L), "probe before any quote drops")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
@@ -675,10 +649,7 @@ class StreamingSpec extends GraftSpec {
     // window are ignored, a user emits exactly once. RocksDB, like the
     // mains.
     import StreamingQueries.{FunnelEvent, FunnelStages}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, JobRunner.RocksDbProvider)
-    try {
+    onRocksDb {
       def ev(u: Long, t: String, tpe: String) = FunnelEvent(u, tpe, ts(t))
       // u1: full funnel inside the window; u2: purchase BEFORE the click
       // (must not count) then click past the window; u3: orphan click
@@ -730,9 +701,6 @@ class StreamingSpec extends GraftSpec {
       assert(byUser(3L)._2 === ts("2024-01-01 00:00:10"), "u3 late anchor")
       assert(byUser(3L)._3 === ts("2024-01-01 00:00:30"), "u3 claimed click")
       assert(byUser(4L)._3 == null, "u4 view only")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
@@ -1007,10 +975,7 @@ class StreamingSpec extends GraftSpec {
   test("streaming grid forward-fill equals the batch twin, out of order") {
     // MapState = its own column family -> requires RocksDB, like the mains
     import StreamingQueries.FillEvent
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, JobRunner.RocksDbProvider)
-    try {
+    onRocksDb {
     val w = 15 * 60 // bucket width in seconds
     def ev(t: String, off: Int, v: Double) =
       FillEvent(t, java.sql.Timestamp.valueOf(
@@ -1057,20 +1022,12 @@ class StreamingSpec extends GraftSpec {
     val aGap = (1 to 3).map(i => streamed(("a", base + i * widthUs)))
     assert(aGap.forall(_ == ((0L, 2.0, true))),
       s"gap buckets carry (1.25+2.75)/2 = 2.0: $aGap")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
   test("streaming heavy hitters: SpaceSaving bounds hold vs exact replay") {
     // MapState -> RocksDB, like the mains
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, JobRunner.RocksDbProvider)
-    try {
+    onRocksDb {
       val capacity = 16
       val nShards = 4
       val toks = Tables.load(spark, sf, "documents")
@@ -1107,11 +1064,6 @@ class StreamingSpec extends GraftSpec {
           assert(summary.contains(t), s"heavy '$t' (> $threshold) must surface")
         }
       }
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
@@ -1121,10 +1073,7 @@ class StreamingSpec extends GraftSpec {
     // BEFORE it, and a bucket buffered before the restart must emit with
     // its exact pre-restart aggregate
     import StreamingQueries.FillEvent
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, JobRunner.RocksDbProvider)
-    try {
+    onRocksDb {
       val dir = java.nio.file.Files.createTempDirectory("graft_gfr").toString
       val (in, out, ckpt) = (s"$dir/in", s"$dir/out", s"$dir/ckpt")
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
@@ -1187,11 +1136,6 @@ class StreamingSpec extends GraftSpec {
       }
       assert(got(base + 4 * widthUs) === ((1L, 7.0, false)),
         "bucket buffered before the restart emits with its exact aggregate")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
@@ -1199,10 +1143,7 @@ class StreamingSpec extends GraftSpec {
     // the bucket-entry ListState is RocksDB state: a near-dup arriving
     // AFTER a restart must still pair with the fingerprint stored BEFORE
     // it — the recovery contract of an ingest-time image dedup
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, JobRunner.RocksDbProvider)
-    try {
+    onRocksDb {
       val dir = java.nio.file.Files.createTempDirectory("graft_phr").toString
       val (in, out, ckpt) = (s"$dir/in", s"$dir/out", s"$dir/ckpt")
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
@@ -1244,19 +1185,11 @@ class StreamingSpec extends GraftSpec {
           r.getAs[Long]("hamming"))).toSet
       assert(got === Set((1L, 2L, 0L)),
         s"the pre-restart fingerprint must pair with the post-restart twin: $got")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
   test("heavy-hitter summaries survive a checkpoint restart") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, JobRunner.RocksDbProvider)
-    try {
+    onRocksDb {
       val dir = java.nio.file.Files.createTempDirectory("graft_hhr").toString
       val (in, out, ckpt) = (s"$dir/in", s"$dir/out", s"$dir/ckpt")
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
@@ -1318,20 +1251,12 @@ class StreamingSpec extends GraftSpec {
           assert(summary.contains(t), s"heavy '$t' still surfaces")
         }
       }
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
   test("streaming subsequence matcher emits batch-exact window distances") {
     import StreamingQueries.FillEvent
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, JobRunner.RocksDbProvider)
-    try {
+    onRocksDb {
       val w = 15 * 60
       def ev(t: String, off: Int, v: Double) =
         FillEvent(t, java.sql.Timestamp.valueOf(
@@ -1358,11 +1283,6 @@ class StreamingSpec extends GraftSpec {
         ("a", base) -> 0L,
         ("a", base + widthUs) -> (100L * 100 + 100L * 100 + 200L * 200)),
         s"closed windows only, row-frame over observed buckets: $rows")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
@@ -1470,10 +1390,7 @@ class StreamingSpec extends GraftSpec {
     // produce the same final state per key (cross-API parity). Requires
     // the RocksDB state store, like the job mains.
     import StreamingQueries.EwmaEvent
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, JobRunner.RocksDbProvider)
-    try {
+    onRocksDb {
       val input = MemoryStream[EwmaEvent]
       val out = StreamingQueries.runningEwmaTws(spark, input.toDS())
       def ev(u: Long, id: Long, t: String, v: Double) = EwmaEvent(u, id, ts(t), v)
@@ -1491,9 +1408,6 @@ class StreamingSpec extends GraftSpec {
         .groupBy(_._1).view.mapValues(_.maxBy(_._2)).toMap
       assert(got(1L) === ((1L, 3L, 0.2 * 30.0 + 0.8 * (0.2 * 20.0 + 0.8 * 10.0))))
       assert(got(2L) === ((2L, 1L, 5.0)))
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
@@ -1507,10 +1421,7 @@ class StreamingSpec extends GraftSpec {
     // Two runs over one checkpoint prove the RocksDB state survives a
     // restart (the TTL has not elapsed, so the fold must resume, not reset).
     import StreamingQueries.EwmaEvent
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, JobRunner.RocksDbProvider)
-    try {
+    onRocksDb {
       val ckpt = java.nio.file.Files.createTempDirectory("tws-ttl").toString
       val input = MemoryStream[EwmaEvent]
       val out = StreamingQueries.runningEwmaTws(
@@ -1543,9 +1454,6 @@ class StreamingSpec extends GraftSpec {
       runUntilEvent(2L)
       val last = buf.synchronized(buf.maxBy(_._2))
       assert(last === ((7L, 2L, 0.2 * 8.0 + 0.8 * 4.0)))
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
@@ -1562,10 +1470,7 @@ class StreamingSpec extends GraftSpec {
       "c2d1" -> Scd2Event(2L, ts("2024-01-01 09:00:00"), 11L, "P9"),
       "c2d3" -> Scd2Event(2L, ts("2024-01-03 09:00:00"), 31L, "P8"),
       "flush" -> Scd2Event(99L, ts("2024-01-10 00:00:00"), 90L, "PX"))
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, JobRunner.RocksDbProvider)
-    try {
+    onRocksDb {
       val input = MemoryStream[Scd2Event]
       val out = StreamingQueries.scd2Stream(
         spark, input.toDS(), watermarkDelay = "2 hours").toDF()
@@ -1599,9 +1504,6 @@ class StreamingSpec extends GraftSpec {
         (1L, 2, "P3", "2024-01-02", "2024-01-04"),
         (2L, 1, "P9", "2024-01-01", "2024-01-03")),
         s"hand-walked versions: $got")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
@@ -1801,10 +1703,7 @@ class StreamingSpec extends GraftSpec {
     def windows(out: String) = TickSink.committedRows(spark, out).drop("batch_id")
       .collect().toSeq
     def key(r: Row) = (r.getAs[String]("ticker"), r.getAs[java.sql.Timestamp]("window_start"))
-    val storeKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevStore = spark.conf.getOption(storeKey)
-    spark.conf.set(storeKey, JobRunner.RocksDbProvider)
-    try {
+    onRocksDb {
       val root = Files.createTempDirectory("graft_mixed").toString
       // reference: one checkpoint, one run over every file
       val refIn = s"$root/ref_in"
@@ -1824,7 +1723,7 @@ class StreamingSpec extends GraftSpec {
       assert(expected.map(key).toSet.size >= 4, s"windows closed: $expected")
       assert(got.size === got.map(key).distinct.size, s"no duplicated window: $got")
       assert(got.map(_.toString).sorted === expected.map(_.toString).sorted)
-    } finally prevStore.fold(spark.conf.unset(storeKey))(spark.conf.set(storeKey, _))
+    }
   }
 
   test("job config: reference property-group shape round-trips") {
@@ -2014,10 +1913,7 @@ class StreamingSpec extends GraftSpec {
       5L -> "2024-01-01 00:00:04", 6L -> "2024-01-01 00:00:03")
     def doc(id: Long) = SimhashDoc(id, corpus.toMap.apply(id),
       java.sql.Timestamp.valueOf(times(id)))
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, JobRunner.RocksDbProvider)
-    try {
+    onRocksDb {
       val input = MemoryStream[SimhashDoc]
       val out = StreamingQueries.simhashPairsStream(spark, input.toDS()).toDF()
       // delivery order deliberately violates event-time order (doc 2, the
@@ -2033,9 +1929,6 @@ class StreamingSpec extends GraftSpec {
       assert(got === batch, "stream pairs must equal the batch operator's")
       assert(got.contains((1L, 2L, 0L)), "identical docs pair at hamming 0")
       assert(got.size >= 3, s"the clustered corpus must yield its near-dups: $got")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
@@ -2065,10 +1958,7 @@ class StreamingSpec extends GraftSpec {
       5L -> "2024-01-01 00:00:03")
     def doc(id: Long) = SimhashDoc(id, corpus.toMap.apply(id),
       java.sql.Timestamp.valueOf(times(id)))
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, JobRunner.RocksDbProvider)
-    try {
+    onRocksDb {
       val input = MemoryStream[SimhashDoc]
       val out = StreamingQueries.phashPairsStream(spark, input.toDS()).toDF()
       val rows = runStream(input, out,
@@ -2080,9 +1970,6 @@ class StreamingSpec extends GraftSpec {
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(got === batch, "stream pairs must equal the batch operator's")
       assert(got.contains((1L, 2L, 0L)), "identical images pair at hamming 0")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
